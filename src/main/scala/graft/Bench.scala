@@ -40,27 +40,14 @@ object Bench {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** One timed PIP-join pass; returns (inputRows, joinedRows, seconds).
-    * mode: "probe" (broadcast prepared-polygon mapPartitions — the designed
-    * fast path), "broadcast" (declarative Catalyst variant), "salted". */
+  /** One timed PIP-join pass (codegen `exprJoin`); returns
+    * (inputRows, joinedRows, seconds). */
   def timedPipJoin(spark: SparkSession, pointsDir: String,
-                   polys: Seq[model.Footprint],
-                   mode: String = sys.env.getOrElse("SPARK_GRAFT_PIP_MODE", "expr")): (Long, Long, Double) = {
-    import spark.implicits._
+                   polys: Seq[model.Footprint]): (Long, Long, Double) = {
     val pts = spark.read.parquet(pointsDir)
     val inputRows = pts.count()
     val t0 = System.nanoTime()
-    val joined = mode match {
-      case "expr" =>
-        operators.PipJoin.exprJoin(pts, polys).count()
-      case "probe" =>
-        operators.PipJoin.probeJoin(
-          pts.as[(String, Double, Double)], polys).count()
-      case "salted" =>
-        operators.PipJoin.saltedJoin(pts, spark.createDataset(polys)).count()
-      case _ =>
-        operators.PipJoin.broadcastJoin(pts, spark.createDataset(polys)).count()
-    }
+    val joined = operators.PipJoin.exprJoin(pts, polys).count()
     val secs = (System.nanoTime() - t0) / 1e9
     (inputRows, joined, secs)
   }

@@ -36,7 +36,6 @@ object ScaleBench {
     // efficiency (a 0.7 s high-level run can't show 0.8 no matter the engine)
     val nKnn = sys.env.get("SPARK_GRAFT_KNN_POINTS").map(_.toLong).getOrElse(n)
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(6)
-    val mode = sys.env.getOrElse("SPARK_GRAFT_PIP_MODE", "expr")
     val nLow = sys.env.get("SPARK_GRAFT_SCALE_N").map(_.toInt).getOrElse(4)
     val nHigh = nLow * 4
     val ptsDir = s"${sys.props("java.io.tmpdir")}/graft_bench_points_$n"
@@ -67,8 +66,8 @@ object ScaleBench {
     val etimes = scala.collection.mutable.Map(nLow -> List.empty[Double], nHigh -> List.empty[Double])
     for (rep <- 1 to reps; cpus <- Seq(nLow, nHigh)) { // interleaved
       val s = session(cpus)
-      Bench.timedPipJoin(s, ptsDir, polys, mode) // per-session JIT warmup
-      val (i, j, secs) = Bench.timedPipJoin(s, ptsDir, polys, mode)
+      Bench.timedPipJoin(s, ptsDir, polys) // per-session JIT warmup
+      val (i, j, secs) = Bench.timedPipJoin(s, ptsDir, polys)
       in = i; joined = j
       times(cpus) = secs :: times(cpus)
       Bench.timedKnnJoin(s, knnDir, polys) // warmup
@@ -97,14 +96,14 @@ object ScaleBench {
     val er32 = eIn / et32
     val eeff = er32 / (4.0 * er8)
     val json =
-      s"""{"metric":"pip-join scaling efficiency local[$nLow]->local[$nHigh]","value":${f"$eff%.3f"},"unit":"ratio","points":$in,"joined":$joined,"n_low":$nLow,"n_high":$nHigh,"rows_per_sec_low":${f"$r8%.0f"},"rows_per_sec_high":${f"$r32%.0f"},"sec_low":${f"$t8%.3f"},"sec_high":${f"$t32%.3f"},"reps":$reps,"mode":"$mode","knn":{"efficiency":${f"$keff%.3f"},"points":$kIn,"rows":$kRows,"rows_per_sec_low":${f"$kr8%.0f"},"rows_per_sec_high":${f"$kr32%.0f"},"sec_low":${f"$kt8%.3f"},"sec_high":${f"$kt32%.3f"},"all_sec_low":[${ktimes(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_high":[${ktimes(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]},"enrich":{"efficiency":${f"$eeff%.3f"},"points":$eIn,"rows":$eRows,"rows_per_sec_low":${f"$er8%.0f"},"rows_per_sec_high":${f"$er32%.0f"},"sec_low":${f"$et8%.3f"},"sec_high":${f"$et32%.3f"},"all_sec_low":[${etimes(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_high":[${etimes(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]},"all_sec_8":[${times(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_32":[${times(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]}"""
+      s"""{"metric":"pip-join scaling efficiency local[$nLow]->local[$nHigh]","value":${f"$eff%.3f"},"unit":"ratio","points":$in,"joined":$joined,"n_low":$nLow,"n_high":$nHigh,"rows_per_sec_low":${f"$r8%.0f"},"rows_per_sec_high":${f"$r32%.0f"},"sec_low":${f"$t8%.3f"},"sec_high":${f"$t32%.3f"},"reps":$reps,"mode":"expr","knn":{"efficiency":${f"$keff%.3f"},"points":$kIn,"rows":$kRows,"rows_per_sec_low":${f"$kr8%.0f"},"rows_per_sec_high":${f"$kr32%.0f"},"sec_low":${f"$kt8%.3f"},"sec_high":${f"$kt32%.3f"},"all_sec_low":[${ktimes(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_high":[${ktimes(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]},"enrich":{"efficiency":${f"$eeff%.3f"},"points":$eIn,"rows":$eRows,"rows_per_sec_low":${f"$er8%.0f"},"rows_per_sec_high":${f"$er32%.0f"},"sec_low":${f"$et8%.3f"},"sec_high":${f"$et32%.3f"},"all_sec_low":[${etimes(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_high":[${etimes(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]},"all_sec_8":[${times(nLow).reverse.map(t => f"$t%.3f").mkString(",")}],"all_sec_32":[${times(nHigh).reverse.map(t => f"$t%.3f").mkString(",")}]}"""
     println(json)
 
     val md =
       s"""# BENCH — measured throughput & scaling (sandbox protocol per BASELINE.md)
          |
          |North-star operator: filter-refine PIP spatial join (hex cell-key
-         |prefilter + exact boundary-inclusive refine), `$mode` physical path
+         |prefilter + exact boundary-inclusive refine), `expr` physical path
          |(fully-codegen pip_matches expression, polygon index as plan
          |reference object), of geotagged points against 101 CityGML-LoD2
          |building footprints (FZK-Haus + 100-building CityJSON grid), skewed

@@ -59,7 +59,7 @@ object SparkEntry {
     import spark.implicits._
     val pts = ImageGen.points(spark, 2000, 8).toDF("image_id", "x", "y")
     val polys = spark.createDataset(fzkFootprints.filter(_.feature_type == "Building"))
-    PipJoin.broadcastJoin(pts, polys)
+    PipJoin.cellJoin(pts, polys)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -147,7 +147,7 @@ object SparkEntry {
         Seq(XY(457845.335, 5439084.125), XY(457852.785, 5439086.295), XY(457848.115, 5439092.635)),
         Seq.empty, Env6(457845.335, 5439084.125, 0, 457852.785, 5439092.635, 0),
         XY(457848.745, 5439087.685), Map.empty)
-      PipJoin.broadcastJoin(pts, s.createDataset(Seq(rect, tri)), res = 12)
+      PipJoin.cellJoin(pts, s.createDataset(Seq(rect, tri)), res = 12)
         .select(col("event_id"), col("feature_id"))
     }),
     "q12_knn" -> ((s, dir) => {
@@ -1480,7 +1480,7 @@ object SparkEntry {
       val pts = ImageGen.points(s, 5000, 8).toDF("image_id", "x", "y")
       val polys = s.createDataset(
         (fzkFootprints ++ cjFootprints).filter(_.feature_type == "Building"))
-      PipJoin.broadcastJoin(pts, polys).select("image_id", "feature_id", "x", "y")
+      PipJoin.cellJoin(pts, polys).select("image_id", "feature_id", "x", "y")
     }),
     "g5_image_neardup" -> ((s, dir) => {
       // perceptual near-dup over the binary image payload: planted png/jpeg

@@ -34,12 +34,11 @@ object Pipeline {
     *
     * PIP physical path: [[PipJoin.auto]] picks by total polygon vertex
     * count — the plan-reference codegen `exprJoin` for the north-star shape
-    * (≤100s of footprints vs 10^12 points), the broadcast cell-join when
-    * the set is plan-too-big but broadcast-fits, the salted SMJ beyond
-    * that — so the entry point is safe by default when someone feeds it a
-    * continent's worth of footprints. Thresholds (total vertices):
-    * `spark.graft.pipeline.pipExprVertexLimit` (default 100k) /
-    * `spark.graft.pipeline.pipBroadcastVertexLimit` (default 5M). */
+    * (≤100s of footprints vs 10^12 points), the cell equi-join above
+    * `spark.graft.pipeline.pipExprVertexLimit` (default 100k), whose
+    * broadcast-or-shuffle exchange Catalyst and AQE pick from statistics —
+    * so the entry point is safe by default when someone feeds it a
+    * continent's worth of footprints. */
   def enrich(images: DataFrame, polys: Seq[Footprint],
              zoom: Int = 20, k: Int = 1, nBuckets: Int = 16,
              keepCols: Seq[String] = Nil): DataFrame = {
@@ -48,9 +47,7 @@ object Pipeline {
     val enriched = PipJoin.auto(
         images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys,
         exprLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipExprVertexLimit", 100000, min = 0),
-        broadcastLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipBroadcastVertexLimit", 5000000, min = 0))
+          "spark.graft.pipeline.pipExprVertexLimit", 100000, min = 0))
       .withColumn("cell", graft.functions.GeoFunctions.hex_encode(
         col("x"), col("y"), lit(PipJoin.DefaultRes)))
       .withColumn("tile_id", graft.functions.GeoFunctions.tile_of(

@@ -4,7 +4,7 @@ package graft.core
  * Deterministic hash primitives used across the engine: content-derived ids
  * (replacing the reference's `UUID.randomUUID`, `GraphRef.java:8-10`, which
  * would break idempotent resume), fingerprints, MinHash/SimHash seeds, and
- * join-salt derivation. All pure functions of their inputs — required for the
+ * seeded streams. All pure functions of their inputs — required for the
  * exactly-once resume semantics (same input partition → same checksum).
  */
 object Hashing {
@@ -53,9 +53,6 @@ object Hashing {
   /** Uniform double in [0,1) from a seed+stream pair. */
   def uniform(seed: Long, stream: Long): Double =
     ((mix64(seed * 0x9e3779b97f4a7c15L + stream) >>> 11).toDouble) / (1L << 53).toDouble
-
-  /** MinHash permutation h_i(x) = mix64(x ^ seed_i). */
-  def minhashPerm(x: Long, perm: Int): Long = mix64(x ^ (0x5851f42d4c957f2dL * (perm + 1)))
 
   /** Rolling polynomial hash (document fingerprinting). */
   def rollingHash(s: String, base: Long = 257L, mod: Long = (1L << 61) - 1): Long = {

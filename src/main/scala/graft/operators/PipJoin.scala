@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.core.Geom
-import graft.core.Geom.{Pt, PreparedPolygon}
+import graft.core.Geom.Pt
 import graft.functions.GeoFunctions._
 import graft.model.Footprint
 
@@ -13,104 +13,47 @@ import graft.model.Footprint
  * BASELINE.json north_star).
  *
  * Replaces the reference's per-partition R*-tree + AABB walk
- * (`CityGMLV2DB.java:211-231`, `Neo4jDB.java:373-385`) with index-as-data:
+ * (`CityGMLV2DB.java:211-231`, `Neo4jDB.java:373-385`) with index-as-data.
+ * Two physical paths, one decision ([[auto]], by total polygon vertices):
  *
- *   polygons --hex_cover(res)--> (cell, polygon)        [small side]
- *   points   --hex_encode(res)--> cell                  [10^12-row side, codegen]
- *   equi-join on cell  (broadcast | salted shuffle)     [Catalyst picks exec]
- *   refine: st_covers_ring(ring, x, y)                  [exact, boundary-incl.]
+ *  - [[exprJoin]]: the polygon index rides in the plan and the scan-side
+ *    generated code probes it per row — no join operator at all;
+ *  - [[cellJoin]]: the same filter–refine as data —
  *
- * The big side never shuffles on the broadcast path; the refine predicate is a
- * Column expression so Catalyst keeps the filter adjacent to the join, and the
- * cell-encode stays inside whole-stage codegen.
+ *      polygons --hex_cover(res)--> (cell, polygon)        [small side]
+ *      points   --hex_encode(res)--> cell                  [10^12-row side, codegen]
+ *      equi-join on cell                                   [Catalyst/AQE pick exec]
+ *      refine: st_covers(ring, holes, x, y)                [exact, boundary-incl.]
  *
- * Skew: dense urban cells concentrate points on few cell keys. `salted` spreads
- * each polygon-cell key over `salts` buckets and routes each point to ONE
- * deterministic bucket — row-set-preserving (property-tested) while dividing
- * the max reducer load by `salts`. AQE skew-split remains on as backstop.
+ * The cell join carries no hint. Catalyst broadcasts the polygon cells when
+ * their size estimate is under `spark.sql.autoBroadcastJoinThreshold` (the
+ * big side then never shuffles); otherwise it shuffles both sides and AQE's
+ * skew join splits a dense urban cell key across map-output blocks. It is
+ * the plan [[org.apache.spark.sql.graft.SpatialJoinRewrite]] builds for the
+ * declarative SQL form.
  */
 object PipJoin {
 
   val DefaultRes = 11 // hex edge ≈ 25 m — sized to the building-footprint scale
 
-  /** Small-side build: one row per (cell, polygon) at `res`. */
-  def polygonCells(polys: Dataset[Footprint], res: Int): DataFrame =
-    polys
-      .withColumn("cell", explode(hex_cover(col("ring"), lit(res))))
+  /**
+   * Cell equi-join path. Points DataFrame must carry (x, y) columns; all its
+   * columns are kept, plus `feature_id`.
+   */
+  def cellJoin(points: DataFrame, polys: Dataset[Footprint], res: Int = DefaultRes): DataFrame = {
+    val cells = polys.withColumn("cell", explode(hex_cover(col("ring"), lit(res))))
       .select(col("cell"), col("feature_id"), col("ring"), col("holes"))
-
-  /**
-   * Broadcast path: polygon side small enough to ship to every executor.
-   * Points DataFrame must carry (x, y) columns; all its columns are kept.
-   */
-  def broadcastJoin(points: DataFrame, polys: Dataset[Footprint], res: Int = DefaultRes): DataFrame = {
-    val cands = polygonCells(polys, res)
-    val pts = points.withColumn("cell", hex_encode(col("x"), col("y"), lit(res)))
-    pts.join(broadcast(cands), Seq("cell"))
-      .where(refinePredicate)
+    points.withColumn("cell", hex_encode(col("x"), col("y"), lit(res)))
+      .join(cells, Seq("cell"))
+      .where(st_covers(col("ring"), col("holes"), col("x"), col("y")))
       .drop("cell", "ring", "holes")
-  }
-
-  /**
-   * Shuffle (sort-merge/shuffled-hash) path with deterministic salting for the
-   * huge-polygon-side case: points pick bucket = hash(point key) % salts; each
-   * (cell, polygon) pair is replicated across all `salts` buckets, so every
-   * point still meets every candidate polygon exactly once.
-   */
-  def saltedJoin(points: DataFrame, polys: Dataset[Footprint],
-                 res: Int = DefaultRes, salts: Int = 8): DataFrame = {
-    val cands = polygonCells(polys, res)
-      .withColumn("salt", explode(lit((0 until salts).toArray)))
-    val pts = points
-      .withColumn("cell", hex_encode(col("x"), col("y"), lit(res)))
-      .withColumn("salt", pmod(hash(col("x"), col("y")), lit(salts)))
-    pts.hint("merge")
-      .join(cands, Seq("cell", "salt"))
-      .where(refinePredicate)
-      .drop("cell", "salt", "ring", "holes")
-  }
-
-  private def refinePredicate: Column =
-    st_covers(col("ring"), col("holes"), col("x"), col("y"))
-
-  /**
-   * mapPartitions probe path (fastest single-node / densest-skew variant):
-   * driver broadcasts cell → prepared-polygon buckets; each partition probes
-   * locally with zero shuffle. The per-partition hash-grid probe is the moral
-   * equivalent of the reference's in-memory R*-tree query, but share-nothing.
-   */
-  def probeJoin(points: Dataset[(String, Double, Double)],
-                polys: Seq[Footprint], res: Int = DefaultRes): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val index: Map[Long, Array[(String, PreparedPolygon)]] = {
-      val pairs = polys.flatMap { f =>
-        val ring = f.ring.map(p => Pt(p.x, p.y)).toArray
-        val holes = f.holes.map(_.map(p => Pt(p.x, p.y)).toArray).toArray
-        val prep = new PreparedPolygon(Geom.Polygon(ring, holes))
-        graft.core.HexGrid.cover(Geom.Polygon(ring, holes), res)
-          .map(cell => (cell, (f.feature_id, prep)))
-      }
-      pairs.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
-    }
-    val bc = spark.sparkContext.broadcast(index)
-    points.mapPartitions { it =>
-      val idx = bc.value
-      it.flatMap { case (id, x, y) =>
-        idx.get(graft.core.HexGrid.encode(x, y, res)) match {
-          case Some(cands) =>
-            cands.iterator.filter(_._2.covers(x, y)).map(c => (id, x, y, c._1))
-          case None => Iterator.empty
-        }
-      }
-    }.toDF("image_id", "x", "y", "feature_id")
   }
 
   /**
    * Fully-codegen expression path: no join operator at all — the polygon
    * index rides in the plan as a reference object and the scan-side generated
    * code calls it per row (see PipMatchesExpr). Fastest variant when the
-   * polygon set fits in the plan; output rows identical to broadcastJoin.
+   * polygon set fits in the plan; output rows identical to cellJoin.
    */
   def exprJoin(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes): DataFrame = {
     val index = new PipIndex(polys, res)
@@ -119,22 +62,18 @@ object PipJoin {
   }
 
   /**
-   * Physical-path auto-selection: the polygon side rides in the plan when it
-   * is small enough to serialize (codegen expr path — fastest, join-free);
-   * broadcast cell-join when it fits the broadcast threshold as exploded
-   * cells; salted shuffle join otherwise (huge or heavily-skewed polygon
-   * side). Mirrors what a planner strategy would choose from statistics.
+   * Path selection: the polygon side rides in the plan ([[exprJoin]]) while
+   * its total vertex count is at most `exprLimit`; above that it is too big
+   * to serialize into every task and takes the [[cellJoin]].
    */
   def auto(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes,
-           exprLimit: Int = 100000, broadcastLimit: Int = 5000000): DataFrame = {
-    val vertices = polys.iterator.map(f => f.ring.size + f.holes.map(_.size).sum).sum
+           exprLimit: Int = 100000): DataFrame = {
+    val vertices = polys.iterator.map(f => (f.ring.size + f.holes.map(_.size).sum).toLong).sum
     if (vertices <= exprLimit) exprJoin(points, polys, res)
     else {
       val spark = points.sparkSession
       import spark.implicits._
-      val ds = spark.createDataset(polys)
-      if (vertices <= broadcastLimit) broadcastJoin(points, ds, res)
-      else saltedJoin(points, ds, res)
+      cellJoin(points, spark.createDataset(polys), res)
     }
   }
 

@@ -137,9 +137,11 @@ object Setback {
   def auto(points: DataFrame, rings: DataFrame, idCol: String = "event_id",
            res: Int = 12, maxR: Int = 16,
            checkpointDir: Option[String] = None): DataFrame = {
-    val limit = points.sparkSession.conf
-      .getOption(BroadcastRingLimitConf).map(_.toInt).getOrElse(4096)
-    if (rings.limit(limit + 1).count() <= limit)
+    val limit = graft.core.Confs.intConf(points.sparkSession, BroadcastRingLimitConf, 4096, min = 0)
+    // the probe reads one row past the threshold; `limit` takes an Int, so
+    // Int.MaxValue (where `limit + 1` would wrap negative) means "always
+    // broadcast"
+    if (limit == Int.MaxValue || rings.limit(limit + 1).count() <= limit)
       broadcastExact(points, rings, idCol)
     else ringSearch(points, rings, idCol, res, maxR, checkpointDir = checkpointDir)
   }

@@ -34,47 +34,30 @@ object TileAssign {
       .withColumn("zoom", explode(lit(zooms.toArray)))
       .withColumn("tile_id", tile_of(col("x"), col("y"), col("zoom")))
 
-  /** images ⋈ features per tile (the raster↔vector assignment). Routes
-    * through [[auto]]: broadcast only when the exploded feature-tile side is
-    * provably bounded — features × zooms × cover-tiles can exceed any
-    * broadcast budget even when the feature TABLE looks small. */
-  def assign(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int]): DataFrame =
-    auto(points, fps, zooms)
-
-  /** Broadcast path: feature-tile side ships to every executor; the point
-    * side never shuffles. */
-  def assignBroadcast(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int]): DataFrame =
-    pointTiles(points, zooms)
-      .join(broadcast(featureTiles(fps, zooms)), Seq("zoom", "tile_id"))
-
-  /** Shuffle (sort-merge) path for an unbounded feature-tile side: plain
-    * equi-join on (zoom, tile_id) — both sides shuffle on the tile key, no
-    * executor holds the whole feature pyramid. */
-  def assignShuffle(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int]): DataFrame =
-    pointTiles(points, zooms)
-      .hint("merge")
-      .join(featureTiles(fps, zooms), Seq("zoom", "tile_id"))
-
   /**
-   * Physical-path auto-selection (same treatment as [[PipJoin.auto]]): count
-   * the exploded feature-tile rows with one small-side pass (the point side
-   * is untouched) and broadcast only under `broadcastLimit`; otherwise take
-   * the shuffle join.
+   * images ⋈ features per tile (the raster↔vector assignment). Broadcasts the
+   * feature-tile side only when it is provably bounded: features × zooms ×
+   * cover-tiles can exceed any broadcast budget even when the feature TABLE
+   * looks small, and Catalyst's estimate of the exploded pyramid is far too
+   * low. So one small-side pass measures the exploded row count (the point
+   * side is untouched); at most `broadcastLimit` rows broadcast, otherwise
+   * both sides shuffle on the tile key (sort-merge) and no executor holds the
+   * whole feature pyramid.
    */
-  def auto(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int],
-           broadcastLimit: Long = 2000000L): DataFrame = {
+  def assign(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int],
+             broadcastLimit: Long = 2000000L): DataFrame = {
     // size the exploded side WITHOUT materializing it: the exploded row
     // count is exactly Σ per-feature cover sizes, computable as one narrow
-    // aggregation over array lengths. No cache — the previous form cached
-    // the full explode for the sizing count, which pinned a multi-million-
-    // row relation for the session precisely when the side was too big to
-    // broadcast; each branch's join now computes the explode exactly once.
+    // aggregation over array lengths. No cache: caching the explode for this
+    // count would pin a multi-million-row relation for the session precisely
+    // when the side is too big to broadcast; each branch's join computes the
+    // explode exactly once.
     val cnt = if (zooms.isEmpty) 0L
       else {
         val row = fps.toDF().select(
           // coalesce: sum over ZERO rows (empty footprint set) is null, and
           // head().getLong would NPE — degenerate inputs must size to 0 and
-          // fall through to an empty join, like the pre-sizing form did
+          // fall through to an empty join
           coalesce(zooms.map(z => sum(size(graft.functions.GeoFunctions.tile_cover(
             col("env"), lit(z)))).cast("long")).reduce(_ + _), lit(0L)).as("n"))
           .head()

@@ -185,14 +185,14 @@ class PlanQualitySpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("TileAssign.auto: large feature-tile side takes the shuffle path, no broadcast") {
+  test("TileAssign.assign: large feature-tile side takes the shuffle path, no broadcast") {
     val fps = graft.Bench.benchPolygons
     val pts = (0L until 2000L).map { i =>
       val (x, y) = graft.sources.ImageGen.geotag(i); (f"i$i%06d", x, y)
     }.toDF("image_id", "x", "y")
     val ds = spark.createDataset(fps)
     // force the "feature pyramid exceeds the broadcast budget" branch
-    val q = TileAssign.auto(pts, ds, Seq(18, 19, 20), broadcastLimit = 10)
+    val q = TileAssign.assign(pts, ds, Seq(18, 19, 20), broadcastLimit = 10)
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin"),
@@ -201,7 +201,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // row set identical to the broadcast path
     val got = q.select("image_id", "feature_id", "zoom", "tile_id")
       .as[(String, String, Int, Long)].collect().toSet
-    val want = TileAssign.assignBroadcast(pts, ds, Seq(18, 19, 20))
+    val want = TileAssign.assign(pts, ds, Seq(18, 19, 20))
       .select("image_id", "feature_id", "zoom", "tile_id")
       .as[(String, String, Int, Long)].collect().toSet
     assert(got === want && want.nonEmpty)
@@ -798,18 +798,44 @@ class PlanQualitySpec extends AnyFunSuite {
       s"clustered layout must row-group-skip: scanned $scanC vs unclustered $scanU")
   }
 
-  test("salted join splits the hot cell key across salts (skew mitigation)") {
-    // 60%-skewed points: the unsalted cell key would put ~60% of rows in one
-    // reducer group; salting spreads them over `salts` buckets
-    val pts = (0L until 4000L).map { i =>
-      val (x, y) = graft.sources.ImageGen.geotag(i); (f"i$i%06d", x, y)
-    }.toDF("image_id", "x", "y")
-    val cell = graft.functions.GeoFunctions.hex_encode(col("x"), col("y"), lit(11))
-    val unsaltedMax = pts.groupBy(cell.as("c")).count().agg(max("count")).head().getLong(0)
-    val saltedMax = pts
-      .withColumn("salt", pmod(hash(col("x"), col("y")), lit(8)))
-      .groupBy(cell.as("c"), col("salt")).count().agg(max("count")).head().getLong(0)
-    assert(unsaltedMax > 2000, s"fixture should be skewed, max=$unsaltedMax")
-    assert(saltedMax < unsaltedMax / 4, s"salting must split the hot key: $saltedMax vs $unsaltedMax")
+  test("cell join under 60% skew: AQE splits the hot cell key (skew=true)") {
+    // 60% of the geotags fall in the FZK envelope, one or two res-11 cells.
+    // With broadcast off the cell join shuffles, and AQE's skew join splits
+    // the hot reducer at map-output-block granularity — so the point side
+    // spans 8 input partitions, and the thresholds are lowered to this
+    // fixture's kilobyte scale
+    val pts = graft.sources.ImageGen.points(spark, 4000, 8).toDF("image_id", "x", "y")
+    val (x0, y0) = (graft.sources.ImageGen.FzkMinX, graft.sources.ImageGen.FzkMinY)
+    val polys = Seq((0.0, 0.0, 12.0), (20.0, 0.0, 8.0), (-30.0, 10.0, 15.0)).zipWithIndex.map {
+      case ((dx, dy, w), i) =>
+        val (minx, miny) = (x0 + dx, y0 + dy)
+        graft.model.Footprint(s"f$i", "Building", 0,
+          Seq(graft.model.XY(minx, miny), graft.model.XY(minx + w, miny),
+            graft.model.XY(minx + w, miny + w), graft.model.XY(minx, miny + w)),
+          Nil, graft.model.Env6(minx, miny, 0, minx + w, miny + w, 0),
+          graft.model.XY(minx + w / 2, miny + w / 2), Map.empty)
+    }
+    val confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = PipJoin.cellJoin(pts, spark.createDataset(polys))
+      // collect q itself, so AQE finalizes the plan read below
+      val got = q.collect()
+        .map(r => (r.getAs[String]("image_id"), r.getAs[String]("feature_id"))).toSet
+      val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(plan.contains("SortMergeJoin(skew=true)"), s"hot cell key must be split:\n$plan")
+      val want = PipJoin.bruteForce(
+        pts.as[(String, Double, Double)].collect().toSeq, polys)
+      assert(want.size > 2000, s"fixture should be skewed into f0, matched ${want.size}")
+      assert(got === want)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -75,4 +75,23 @@ class SetbackSpec extends AnyFunSuite {
       assert(rows(viaRings) === want)
     } finally spark.conf.unset(Setback.BroadcastRingLimitConf)
   }
+
+  test("auto: a non-numeric ring-limit conf fails naming the key") {
+    spark.conf.set(Setback.BroadcastRingLimitConf, "lots")
+    try {
+      val e = intercept[IllegalArgumentException](Setback.auto(points, rings))
+      assert(e.getMessage.contains(Setback.BroadcastRingLimitConf), e.getMessage)
+    } finally spark.conf.unset(Setback.BroadcastRingLimitConf)
+  }
+
+  test("auto: an Int.MaxValue ring limit broadcasts, rows == ringSearch") {
+    val want = rows(Setback.ringSearch(points, rings))
+    spark.conf.set(Setback.BroadcastRingLimitConf, Int.MaxValue.toString)
+    try {
+      val q = Setback.auto(points, rings)
+      assert(q.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
+        "Int.MaxValue must take the broadcast path, not overflow into the ring search")
+      assert(rows(q) === want)
+    } finally spark.conf.unset(Setback.BroadcastRingLimitConf)
+  }
 }
