@@ -28,31 +28,48 @@ object HexGrid {
   private val Sqrt7 = math.sqrt(7.0)
   private val Sqrt3 = math.sqrt(3.0)
 
-  def edge(res: Int): Double = Edge0 / math.pow(Sqrt7, res)
+  // per-res edge lengths and apothems, computed once with the defining
+  // expressions so every value is the same double a per-call pow would give
+  private val Edges: Array[Double] = Array.tabulate(MaxRes + 1)(res => Edge0 / math.pow(Sqrt7, res))
+  private val Apothems: Array[Double] = Edges.map(_ * Sqrt3 / 2.0)
+
+  // an explicit throw instead of `require`: its by-name message would
+  // allocate a closure on every call of the per-row kernels
+  private def checkRes(res: Int): Unit =
+    if (res < 0 || res > MaxRes)
+      throw new IllegalArgumentException(s"requirement failed: res out of range: $res")
+
+  def edge(res: Int): Double = { checkRes(res); Edges(res) }
 
   /** inradius (apothem) of a hexagon at `res`. */
-  def apothem(res: Int): Double = edge(res) * Sqrt3 / 2.0
+  def apothem(res: Int): Double = { checkRes(res); Apothems(res) }
 
   // ---- id packing: [4 bits res][30 bits q+OFF][30 bits r+OFF] ----
   private val Off = 1 << 29
   private val Mask30 = (1L << 30) - 1
 
-  def pack(res: Int, q: Int, r: Int): Long = {
-    require(res >= 0 && res <= MaxRes, s"res out of range: $res")
+  def pack(res: Int, q: Int, r: Int): Long = { checkRes(res); packValid(res, q, r) }
+
+  private def packValid(res: Int, q: Int, r: Int): Long =
     (res.toLong << 60) | ((q.toLong + Off) << 30) | (r.toLong + Off)
-  }
 
   def resOf(cell: Long): Int = (cell >>> 60).toInt
   def qOf(cell: Long): Int = (((cell >>> 30) & Mask30) - Off).toInt
   def rOf(cell: Long): Int = ((cell & Mask30) - Off).toInt
 
-  /** Point -> containing cell at `res` (flat-top axial rounding). */
+  /** Point -> containing cell at `res` (flat-top axial rounding, cube-rounded inline). */
   def encode(x: Double, y: Double, res: Int): Long = {
     val size = edge(res)
     val q = (2.0 / 3.0 * x) / size
     val r = (-1.0 / 3.0 * x + Sqrt3 / 3.0 * y) / size
-    val (qi, ri) = cubeRound(q, r)
-    pack(res, qi, ri)
+    val s = -q - r
+    var qi = math.round(q).toInt
+    var ri = math.round(r).toInt
+    val si = math.round(s).toInt
+    val dq = math.abs(qi - q); val dr = math.abs(ri - r); val ds = math.abs(si - s)
+    if (dq > dr && dq > ds) qi = -ri - si
+    else if (dr > ds) ri = -qi - si
+    packValid(res, qi, ri)
   }
 
   /** Cell center in input coordinates. */
@@ -70,17 +87,6 @@ object HexGrid {
       val ang = math.Pi / 3.0 * i
       Pt(c.x + size * math.cos(ang), c.y + size * math.sin(ang))
     }
-  }
-
-  private def cubeRound(q: Double, r: Double): (Int, Int) = {
-    val s = -q - r
-    var qi = math.round(q).toInt
-    var ri = math.round(r).toInt
-    val si = math.round(s).toInt
-    val dq = math.abs(qi - q); val dr = math.abs(ri - r); val ds = math.abs(si - s)
-    if (dq > dr && dq > ds) qi = -ri - si
-    else if (dr > ds) ri = -qi - si
-    (qi, ri)
   }
 
   /** Hex (cube) distance between two same-res cells. */
@@ -135,8 +141,8 @@ object HexGrid {
     val env = poly.env
     val size = edge(res)
     val rc = size // circumradius
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val ap = apothem(res)
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
     // scan candidate axial range from bbox corners expanded by circumradius
     val xs = Array(env.minx - rc, env.maxx + rc)
     val ys = Array(env.miny - rc, env.maxy + rc)
@@ -156,14 +162,13 @@ object HexGrid {
         val cy = size * (Sqrt3 / 2.0 * q + Sqrt3 * r)
         // hex bbox vs polygon env (touching included — reference P6 semantics)
         if (cx + rc >= env.minx && cx - rc <= env.maxx &&
-            cy + apothem(res) >= env.miny && cy - apothem(res) <= env.maxy) {
-          val cell = pack(res, q, r)
-          if (seen.add(cell)) out += cell
+            cy + ap >= env.miny && cy - ap <= env.maxy) {
+          out += packValid(res, q, r) // each (q, r) is visited once
         }
         r += 1
       }
       q += 1
     }
-    out.toArray
+    out.result()
   }
 }
