@@ -115,10 +115,31 @@ object HexGrid {
     out
   }
 
-  /** Only the hollow ring at exact hex distance k. */
-  def ring(cell: Long, k: Int): Array[Long] =
-    if (k == 0) Array(cell)
-    else kRing(cell, k).filter(c => dist(cell, c) == k)
+  // axial unit steps in cyclic order; DQ(i) + DQ(i + 2) == DQ(i + 1) (mod 6)
+  private val DQ = Array(1, 1, 0, -1, -1, 0)
+  private val DR = Array(0, -1, -1, 0, 1, 1)
+
+  /**
+   * The i-th cell (0 ≤ i < 6k; only i = 0 at k = 0) of the hollow ring at hex
+   * distance k: side s = i / k starts at the corner k·step((s + 4) mod 6) and
+   * walks j = i mod k cells along step(s). Allocation-free, so ring walks
+   * (e.g. [[graft.operators.KnnIndex]]) can iterate it per probe.
+   */
+  def ringCell(cell: Long, k: Int, i: Int): Long =
+    if (k == 0) cell
+    else {
+      val s = i / k; val j = i - s * k; val c = if (s < 2) s + 4 else s - 2
+      packValid(resOf(cell), qOf(cell) + k * DQ(c) + j * DQ(s), rOf(cell) + k * DR(c) + j * DR(s))
+    }
+
+  /** Only the hollow ring at exact hex distance k (6k cells, 1 at k = 0), side by side. */
+  def ring(cell: Long, k: Int): Array[Long] = {
+    require(k >= 0, s"ring radius must be >= 0: $k")
+    val out = new Array[Long](if (k == 0) 1 else 6 * k)
+    var i = 0
+    while (i < out.length) { out(i) = ringCell(cell, k, i); i += 1 }
+    out
+  }
 
   /** Parent cell (containment of center — hex hierarchies are non-nesting, like H3). */
   def parent(cell: Long): Long = {
