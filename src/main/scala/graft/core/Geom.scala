@@ -194,67 +194,91 @@ object Geom {
    * per-point refine cost is O(edges in stripe) instead of O(all edges). This is
    * the refine-stage analog of the reference's per-partition R*-tree
    * (`CityGMLV2DB.java:211-231`) — built once per broadcast, probed per row.
+   *
+   * Layout: the stripes' edges are flat CSR primitive arrays — stripe s owns
+   * edges `stripeOff(s) until stripeOff(s + 1)`, whose endpoints are
+   * interleaved in `xy` and whose ring (0 = outer, 1.. = holes) is in
+   * `edgeRing`, ordered by ring. One pass over a stripe therefore settles
+   * each ring's even-odd parity as soon as its run of edges ends, for any
+   * number of holes, and `covers` allocates nothing. Boundary-inclusive:
+   * every edge's on-segment test runs before its crossing is counted.
    */
   final class PreparedPolygon(val poly: Polygon, stripes: Int = 16) extends Serializable {
     private val env = poly.env
     private val sy = env.miny
     private val step = math.max((env.maxy - env.miny) / stripes, 1e-300)
-    // stripe -> packed edge list (indices into ring, then hole rings appended)
-    private val allRings: Array[Array[Pt]] = Array(poly.ring) ++ poly.holes
-    private val stripeEdges: Array[Array[(Int, Int)]] = {
-      val buf = Array.fill(stripes)(scala.collection.mutable.ArrayBuffer.empty[(Int, Int)])
+    private val stripeOff: Array[Int] = {
+      val off = new Array[Int](stripes + 1)
+      eachEdge((_, _, _, s) => off(s + 1) += 1)
+      var s = 0
+      while (s < stripes) { off(s + 1) += off(s); s += 1 }
+      off
+    }
+    // edge k runs (xy(4k), xy(4k+1)) → (xy(4k+2), xy(4k+3)) on ring edgeRing(k)
+    private val xy = new Array[Double](4 * stripeOff(stripes))
+    private val edgeRing = new Array[Int](stripeOff(stripes))
+    locally {
+      val fill = java.util.Arrays.copyOf(stripeOff, stripes)
+      eachEdge { (r, a, b, s) =>
+        val k = fill(s); fill(s) += 1
+        xy(4 * k) = a.x; xy(4 * k + 1) = a.y; xy(4 * k + 2) = b.x; xy(4 * k + 3) = b.y
+        edgeRing(k) = r
+      }
+    }
+
+    /** Calls f(ring, a, b, stripe) for each stripe of each edge, in ring, edge, stripe order. */
+    private def eachEdge(f: (Int, Pt, Pt, Int) => Unit): Unit = {
+      val rings = poly.ring +: poly.holes
       var r = 0
-      while (r < allRings.length) {
-        val ring = allRings(r)
+      while (r < rings.length) {
+        val ring = rings(r)
         val n = if (ring.length > 1 && ring(0) == ring(ring.length - 1)) ring.length - 1 else ring.length
         var i = 0
         while (i < n) {
           val a = ring(i); val b = ring((i + 1) % n)
-          val lo = clamp(((math.min(a.y, b.y) - sy) / step).toInt)
+          var s = clamp(((math.min(a.y, b.y) - sy) / step).toInt)
           val hi = clamp(((math.max(a.y, b.y) - sy) / step).toInt)
-          var s = lo
-          while (s <= hi) { buf(s) += ((r, i)); s += 1 }
+          while (s <= hi) { f(r, a, b, s); s += 1 }
           i += 1
         }
         r += 1
       }
-      buf.map(_.toArray)
     }
 
     private def clamp(i: Int): Int = if (i < 0) 0 else if (i >= stripes) stripes - 1 else i
 
     def covers(x: Double, y: Double): Boolean = {
       if (!env.contains2D(x, y)) return false
-      // stripe-indexed even-odd count per ring + boundary test
-      val edges = stripeEdges(clamp(((y - sy) / step).toInt))
-      val crossings = new Array[Int](allRings.length)
-      var k = 0
-      while (k < edges.length) {
-        val (r, i) = edges(k)
-        val ring = allRings(r)
-        val n = if (ring.length > 1 && ring(0) == ring(ring.length - 1)) ring.length - 1 else ring.length
-        val a = ring(i); val b = ring((i + 1) % n)
-        if (segContains(a, b, x, y)) return true
-        if ((a.y > y) != (b.y > y)) {
-          val xint = a.x + (y - a.y) / (b.y - a.y) * (b.x - a.x)
-          if (x < xint) crossings(r) += 1
+      val s = clamp(((y - sy) / step).toInt)
+      val end = stripeOff(s + 1)
+      var ring = 0          // ring of the current run of edges
+      var odd = false       // its crossing parity so far
+      var outerOdd = false  // the outer ring's parity (0 crossings if it has no edge here)
+      var holeOdd = false   // some hole has odd parity
+      var k = stripeOff(s)
+      while (k < end) {
+        val r = edgeRing(k)
+        if (r != ring) {
+          if (ring == 0) outerOdd = odd else if (odd) holeOdd = true
+          ring = r; odd = false
+        }
+        val x0 = xy(4 * k); val y0 = xy(4 * k + 1); val x1 = xy(4 * k + 2); val y1 = xy(4 * k + 3)
+        if (segContains(x0, y0, x1, y1, x, y)) return true
+        if ((y0 > y) != (y1 > y)) {
+          val xint = x0 + (y - y0) / (y1 - y0) * (x1 - x0)
+          if (x < xint) odd = !odd
         }
         k += 1
       }
-      if (crossings(0) % 2 == 0) return false
-      var r = 1
-      while (r < allRings.length) {
-        if (crossings(r) % 2 == 1) return false
-        r += 1
-      }
-      true
+      if (ring == 0) outerOdd = odd else if (odd) holeOdd = true
+      outerOdd && !holeOdd
     }
 
-    private def segContains(a: Pt, b: Pt, x: Double, y: Double): Boolean = {
-      val cross = (b.x - a.x) * (y - a.y) - (b.y - a.y) * (x - a.x)
-      if (math.abs(cross) > 1e-12 * (math.abs(b.x - a.x) + math.abs(b.y - a.y) + 1.0)) return false
-      x >= math.min(a.x, b.x) - 1e-12 && x <= math.max(a.x, b.x) + 1e-12 &&
-        y >= math.min(a.y, b.y) - 1e-12 && y <= math.max(a.y, b.y) + 1e-12
+    private def segContains(x0: Double, y0: Double, x1: Double, y1: Double, x: Double, y: Double): Boolean = {
+      val cross = (x1 - x0) * (y - y0) - (y1 - y0) * (x - x0)
+      if (math.abs(cross) > 1e-12 * (math.abs(x1 - x0) + math.abs(y1 - y0) + 1.0)) return false
+      x >= math.min(x0, x1) - 1e-12 && x <= math.max(x0, x1) + 1e-12 &&
+        y >= math.min(y0, y1) - 1e-12 && y <= math.max(y0, y1) + 1e-12
     }
   }
 }
