@@ -318,9 +318,7 @@ case class HexRingExpr(first: Expression, second: Expression,
 
 object HexRingKernel {
   def eval(x: Double, y: Double, res: Int, r: Int): ArrayData = {
-    val c0 = HexGrid.encode(x, y, res)
-    val cells = if (r == 0) Array(c0) else HexGrid.ring(c0, r)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(cells)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(HexGrid.ring(HexGrid.encode(x, y, res), r))
   }
 }
 
