@@ -11,67 +11,92 @@ import graft.core.HexGrid
 /**
  * The per-row kernels of `Pipeline.enrich` allocate nothing on their common
  * paths: `HexGrid.encode`, `PreparedPolygon.covers`, and `PipIndex.matches`
- * on misses and single hits. Measured with the JVM's per-thread allocation
- * counter over 200k calls after a warm-up; the bytecode of these paths has
- * no allocation site, so the bound holds interpreted or compiled.
+ * on misses and single hits. Each is measured with the JVM's per-thread
+ * allocation counter over 200k calls after a warm-up, both in the test JVM
+ * and in a child JVM run with `-Xint`. The JIT's escape analysis can remove
+ * an allocation the bytecode still makes (a tuple or a `require` message
+ * closure that never escapes), so only the interpreter run pins the bytecode.
  */
 class AllocationGuardSpec extends AnyFunSuite {
 
-  private val Calls = 200000
+  private def check(perCall: Seq[(String, Double)]): Unit = {
+    assert(perCall.map(_._1) === AllocationProbe.Kernels)
+    val over = perCall.filter(_._2 >= 1.0)
+    assert(over.isEmpty, over.map { case (kernel, b) => s"$kernel: $b bytes per call" }.mkString("; "))
+  }
+
+  test("encode, covers and the miss/single-hit matches allocate < 1 byte per call, JIT-compiled") {
+    assume(AllocationProbe.supported)
+    check(AllocationProbe.measure())
+  }
+
+  test("encode, covers and the miss/single-hit matches allocate < 1 byte per call, interpreted (-Xint)") {
+    assume(AllocationProbe.supported)
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.toArray.map(_.toString)
+      .filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xint", "-Xmx512m") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), AllocationProbe.getClass.getName.stripSuffix("$"))
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() === 0, out.mkString("\n"))
+    check(out.filter(_.startsWith("alloc\t")).map { l =>
+      val Array(_, kernel, b) = l.split('\t'); kernel -> b.toDouble
+    })
+  }
+}
+
+/** Measures the guarded kernels on the current thread; `main` prints one `alloc<TAB>kernel<TAB>bytes` line each. */
+object AllocationProbe {
+
+  val Calls = 200000
+  val Kernels = Seq("HexGrid.encode", "PreparedPolygon.covers", "PipIndex.matches miss", "PipIndex.matches single hit")
 
   private val mx = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  def supported: Boolean = mx.isThreadAllocatedMemorySupported && mx.isThreadAllocatedMemoryEnabled
 
   /** Average bytes the current thread allocates per call of `body(i)`, i cycling over `n` inputs. */
   private def bytesPerCall(n: Int)(body: Int => Int): Double = {
     var sink = 0
     var i = 0
-    while (i < Calls) { sink += body(i % n); i += 1 } // warm-up
+    while (i < n) { sink += body(i); i += 1 } // warm-up: lazy state, class loading
     val tid = Thread.currentThread().getId
     val before = mx.getThreadAllocatedBytes(tid)
     i = 0
     while (i < Calls) { sink += body(i % n); i += 1 }
     val after = mx.getThreadAllocatedBytes(tid)
-    assert(sink != Int.MinValue) // keep the results live
+    if (sink == Int.MinValue) println(sink) // keeps the results live
     (after - before).toDouble / Calls
   }
 
-  private lazy val polys = ProbeFixtures.disjoint
-  private lazy val index = new PipIndex(polys.map { case (id, p) => ProbeFixtures.footprint(id, p) }, PipJoin.DefaultRes)
-
-  /** Probes split by outcome: (misses, single hits), as coordinate arrays. */
-  private lazy val (misses, singles) = {
-    val byHits = ProbeFixtures.probes(polys).groupBy { case (_, x, y) => index.matches(x, y).numElements() }
-    def xy(ps: Seq[(String, Double, Double)]) = (ps.map(_._2).toArray, ps.map(_._3).toArray)
-    (xy(byHits(0)), xy(byHits(1)))
-  }
-
-  test("HexGrid.encode allocates < 1 byte per call") {
-    assume(mx.isThreadAllocatedMemorySupported)
-    val (xs, ys) = misses
-    val b = bytesPerCall(xs.length)(i => HexGrid.encode(xs(i), ys(i), PipJoin.DefaultRes).toInt)
-    assert(b < 1.0, s"$b bytes per encode")
-  }
-
-  test("PreparedPolygon.covers allocates < 1 byte per call, 70 holes included") {
-    assume(mx.isThreadAllocatedMemorySupported)
-    val prepared = polys.map { case (_, p) => new PreparedPolygon(p) }.toArray
+  def measure(): Seq[(String, Double)] = {
+    val polys = ProbeFixtures.disjoint
     val probes = ProbeFixtures.probes(polys)
     val xs = probes.map(_._2).toArray; val ys = probes.map(_._3).toArray
-    val b = bytesPerCall(xs.length) { i =>
-      var hits = 0
-      var j = 0
-      while (j < prepared.length) { if (prepared(j).covers(xs(i), ys(i))) hits += 1; j += 1 }
-      hits
-    }
-    assert(b < 1.0, s"$b bytes per ${prepared.length} covers calls")
+
+    // covers on probes seeded around each footprint's own envelope, so most
+    // calls pass the envelope test and walk a stripe
+    val prepared = polys.map { case (_, p) => new PreparedPolygon(p) }.toArray
+    val own = ProbeFixtures.seeded(polys, 200, 23)
+    val owner = own.indices.map(_ / 200).toArray
+    val ox = own.map(_._2).toArray; val oy = own.map(_._3).toArray
+
+    val index = new PipIndex(polys.map { case (id, p) => ProbeFixtures.footprint(id, p) }, PipJoin.DefaultRes)
+    val hits = Array.tabulate(xs.length)(i => index.matches(xs(i), ys(i)).numElements())
+    def withHits(h: Int) = { val sel = hits.indices.filter(hits(_) == h); (sel.map(xs).toArray, sel.map(ys).toArray) }
+    val (mx0, my0) = withHits(0)
+    val (mx1, my1) = withHits(1)
+    require(mx0.length > 500 && mx1.length > 500, s"${mx0.length} misses, ${mx1.length} single hits")
+
+    Seq(
+      bytesPerCall(xs.length)(i => HexGrid.encode(xs(i), ys(i), PipJoin.DefaultRes).toInt),
+      bytesPerCall(ox.length)(i => if (prepared(owner(i)).covers(ox(i), oy(i))) 1 else 0),
+      bytesPerCall(mx0.length)(i => index.matches(mx0(i), my0(i)).numElements()),
+      bytesPerCall(mx1.length)(i => index.matches(mx1(i), my1(i)).numElements())
+    ).zip(Kernels).map(_.swap)
   }
 
-  test("PipIndex.matches allocates < 1 byte per call on misses and single hits") {
-    assume(mx.isThreadAllocatedMemorySupported)
-    for (((xs, ys), what) <- Seq(misses -> "miss", singles -> "single hit")) {
-      assert(xs.length > 500, what)
-      val b = bytesPerCall(xs.length)(i => index.matches(xs(i), ys(i)).numElements())
-      assert(b < 1.0, s"$b bytes per $what")
-    }
-  }
+  def main(args: Array[String]): Unit =
+    measure().foreach { case (kernel, b) => println(s"alloc\t$kernel\t$b") }
 }
