@@ -53,12 +53,10 @@ object ProbeFixtures {
   /** JTS accepts the zero-height rings but treats them as invalid; compare JTS on valid shapes only. */
   def degenerate(id: String): Boolean = id == "flat" || id == "slit"
 
-  def rings(p: Polygon): Seq[Array[Pt]] = p.ring +: p.holes.toSeq
-
   /** Planted boundary points: (id, x, y, onAxisAlignedEdge) for every vertex and edge midpoint. */
   def planted(polys: Seq[(String, Polygon)]): Seq[(String, Double, Double, Boolean)] =
     polys.flatMap { case (id, p) =>
-      rings(p).zipWithIndex.flatMap { case (r, ri) =>
+      (p.ring +: p.holes.toSeq).zipWithIndex.flatMap { case (r, ri) =>
         r.indices.flatMap { k =>
           val a = r(k); val b = r((k + 1) % r.length)
           Seq((s"${id}_v${ri}_$k", a.x, a.y, true),
