@@ -118,8 +118,11 @@ object Bench {
         .groupBy("tile_id").count().count()
     }
 
-    // distributed kNN ring-expansion path (huge-target-side variant) —
-    // regression canary for the round-loop job count and checkpoint behavior
+    // distributed kNN ring-expansion path (huge-target-side variant). ~1 in
+    // 1,000 points probes, far below spark.graft.knn.smallProbeLimit, so this
+    // is the small-probe regime: regression canary for its driver-held round
+    // loop, one target scan job per ring round (KnnJoinSpec covers the
+    // big-probe regime's checkpointed rounds)
     val (ringRows, ringSecs) = bestOf3 {
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
       // target grid spans the FULL geotag area (center ± ~450 m) so every

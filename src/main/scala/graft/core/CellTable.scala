@@ -10,7 +10,8 @@ import scala.collection.mutable
  * key on every probe — one boxed Long per scanned row. An empty slot holds a
  * null bucket, so `get` allocates nothing and returns null on a miss.
  */
-final class CellTable private (keys: Array[Long], vals: Array[Array[Int]]) {
+final class CellTable private (keys: Array[Long], vals: Array[Array[Int]])
+    extends Serializable {
   private val mask = keys.length - 1
 
   /** Ordinals filed under `cell`, in insertion order; null on a miss. */

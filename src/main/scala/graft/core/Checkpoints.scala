@@ -6,7 +6,9 @@ import org.apache.spark.sql.DataFrame
  * Per-round eager materialization for iterative operators (BFS levels,
  * connected components, kNN ring expansion). Each round's small scalar state
  * must be cut from its lineage, or every action re-runs the whole round chain
- * (recompute amplification across rounds). Two modes:
+ * (recompute amplification across rounds). kNN ring expansion uses it only in
+ * its big-probe regime: a small probe side keeps its round state on the
+ * driver, checkpoints nothing and never touches the checkpoint dir. Two modes:
  *
  *  - `None` (default): `localCheckpoint(eager = true)` — blocks live in
  *    executor block managers. Fastest, and exactly right in local mode; but

@@ -1,9 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.core.HexGrid
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TopKBuffer
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.{CellTable, HexGrid}
 
 /**
  * k-nearest-neighbour join against city-object centroids (BASELINE.json
@@ -19,11 +25,12 @@ import graft.core.HexGrid
  *     density; every probe expands k-rings locally until the provable stop
  *     bound. Zero shuffle on the probe side — the 10^12-row-scan shape.
  *
- *  2. [[ringJoin]] — giant target side: iterative (ring-r explode) ⋈ (targets
- *     by cell) equi-joins, accumulating candidates until every probe holds k
- *     neighbours within the ring-r guarantee radius. Each round is one
- *     shuffle-free broadcast or one shuffle join; rounds are bounded by the
- *     stop bound below.
+ *  2. [[ringJoin]] — giant target side: iterative ring-r expansion against
+ *     the targets by cell, accumulating candidates until every probe holds k
+ *     neighbours within the ring-r guarantee radius. A small probe side keeps
+ *     its round state on the driver (one target scan per round); a big one
+ *     runs shuffle-join rounds over checkpointed state. Rounds are bounded by
+ *     the stop bound below.
  *
  * Stop bound: for hexagons with apothem a, two cells at hex distance h have
  * center distance ≥ √3·a·h (tight along the alternating-neighbor direction),
@@ -64,55 +71,199 @@ object KnnJoin {
 
   /**
    * Distributed ring-expansion path for huge target sides: per round r,
-   * unfinished probes explode their ring-r cells and equi-join targets
-   * bucketed by cell; terminate when the k-th best distance beats the ring
-   * bound.
+   * unfinished probes meet the targets in their ring-r..rHi cells; a probe
+   * finishes when its k-th best distance beats the ring bound. Rounds double
+   * their ring span (0-1, 2-4, 5-10, 11-22, …), and probes still open after
+   * `maxR` rings get an exact scan of every target instead of a silently
+   * truncated top-k.
    *
-   * The accumulator is pruned to the running top-k per probe after every
-   * round's ranking — provably safe because d2 is static, so a candidate
-   * outside the current top-k can never re-enter — and finished probes leave
-   * the loop entirely (their final top-k rows move to a result block). Each
-   * round's sort volume is therefore bounded by k × pending + new candidates,
-   * instead of re-sorting every candidate ever seen for every probe ever
-   * submitted (the O(rounds × total-candidates) shape this replaces).
+   * Two regimes, chosen once by a limited collect of the probe side:
    *
-   * `checkpointDir`: see [[graft.core.Checkpoints]] — unset uses local
-   * checkpoints (fastest; local-mode/testing), set uses reliable checkpoints
-   * that survive executor loss on a real cluster.
+   *  - SMALL probe side (≤ `spark.graft.knn.smallProbeLimit`, default 65,536):
+   *    the round state — pending probes and a k-entry top-k per probe — is
+   *    small by definition, so the driver holds it. Each round broadcasts a
+   *    [[CellTable]] of the pending probes' ring cells with their
+   *    coordinates, and ONE `mapPartitions` over the target rows keeps a
+   *    per-partition top-k per hit probe; the driver merges these k-bounded
+   *    buffers and drops finished probes. No shuffle, no checkpoint, no
+   *    persist: a round is one job, and the result is a local DataFrame.
+   *    `spark.graft.knn.broadcastRowsLimit` caps the probe-ring rows (pending
+   *    probes × ring cells) shipped per broadcast; a round over it scans the
+   *    targets once per chunk of pending probes.
+   *  - BIG probe side: the target table is pre-partitioned by cell and
+   *    persisted, and each round shuffles only the exploded ring cells of the
+   *    still-pending probes (persist carries the partitioning through AQE
+   *    where a checkpoint would not — see the PlanQualitySpec gate). The
+   *    accumulator is pruned to the running top-k per probe after every
+   *    round's ranking — safe because d2 is static, so a candidate outside
+   *    the current top-k can never re-enter — and finished probes leave the
+   *    loop with their final rows.
+   *
+   * Both regimes compute d2 as `(cx - x) * (cx - x) + (cy - y) * (cy - y)` and
+   * rank with the same [[TopKBuffer]] order (d2, target_id), one top-k per
+   * probe_id, so their rows are identical. Probes with a null coordinate and
+   * targets with a null column yield no rows.
+   *
+   * `checkpointDir` (big regime only): see [[graft.core.Checkpoints]] — unset
+   * uses local checkpoints (fastest; local-mode/testing), set uses reliable
+   * checkpoints that survive executor loss on a real cluster.
    */
   def ringJoin(probes: DataFrame, targets: DataFrame,
                k: Int, res: Int = 12, maxR: Int = 16,
                ringsPerRound: Int = 2,
                checkpointDir: Option[String] = None): DataFrame = {
+    require(k >= 1, s"ringJoin: k must be >= 1, got $k")
     val spark = probes.sparkSession
-    graft.functions.GeoFunctions.register(spark)
-    val ck = graft.core.Checkpoints.strategy(probes, checkpointDir)
-    val tBase = targets.select(col("target_id").cast("string"),
-      col("cx").cast("double"), col("cy").cast("double"))
-      .withColumn("tcell", graft.functions.GeoFunctions.hex_encode(col("cx"), col("cy"), lit(res)))
-    // Two physical regimes, chosen ONCE from the probe count (guide §3.1 —
-    // pick the join strategy deliberately):
-    //  - SMALL probe side (≤ spark.graft.knn.smallProbeLimit): each round
-    //    BROADCASTS the exploded probe-ring cells and streams the (huge by
-    //    premise) target table from an UNSHUFFLED cache — the target side
-    //    is never exchanged at all, the §3.1 "broadcast the side that fits"
-    //    move. A per-round row guard (pending × ring cells ≤
-    //    spark.graft.knn.broadcastRowsLimit) falls back to a plain shuffle
-    //    join for the rare wide-ring straggler round.
-    //  - BIG probe side: the original layout — target table pre-partitioned
-    //    by the per-round join key (tcell) and PERSISTED, so each round
-    //    shuffles only the exploded ring cells of the still-pending probes
-    //    (persist carries the partitioning through AQE where a checkpoint
-    //    would not — see the PlanQualitySpec gate).
     val smallProbeLimit = graft.core.Confs.longConf(spark,
       "spark.graft.knn.smallProbeLimit", 65536L, min = 0L)
     val broadcastRowsLimit = graft.core.Confs.longConf(spark,
       "spark.graft.knn.broadcastRowsLimit", 4L << 20, min = 1L)
-    val probes0 = ck(probes.select(col("probe_id").cast("string"),
-      col("x").cast("double"), col("y").cast("double")))
+    val p = probes.select(col("probe_id").cast("string"),
+      col("x").cast("double"), col("y").cast("double"))
+    val t = targets.select(col("target_id").cast("string"),
+      col("cx").cast("double"), col("cy").cast("double"))
+    // one limited collect both sizes the probe side and, when small, ships it
+    val head = p.limit((math.min(smallProbeLimit, Int.MaxValue - 1L) + 1L).toInt).collect()
+    if (head.length <= smallProbeLimit)
+      driverRounds(spark, head, t, k, res, maxR, ringsPerRound, broadcastRowsLimit)
+    else shuffleRounds(p, t, k, res, maxR, ringsPerRound, checkpointDir)
+  }
+
+  private val ResultSchema = new StructType()
+    .add("probe_id", StringType).add("target_id", StringType)
+    .add("d2", DoubleType).add("rnk", IntegerType)
+
+  private def localResult(spark: SparkSession, rows: java.util.List[Row]): DataFrame =
+    spark.createDataFrame(rows, ResultSchema)
+
+  /**
+   * The probes one target scan meets: coordinates, each probe's top-k slot
+   * among `nSlots`, and the table of their ring cells this round (null: every
+   * probe meets every target — the exact fallback).
+   */
+  private final class ScanSide(val xs: Array[Double], val ys: Array[Double],
+                               val slot: Array[Int], val nSlots: Int,
+                               val cells: CellTable) extends Serializable
+
+  /** Small-probe regime of [[ringJoin]]: round state on the driver. */
+  private def driverRounds(spark: SparkSession, probeRows: Array[Row], targets: DataFrame,
+                           k: Int, res: Int, maxR: Int, ringsPerRound: Int,
+                           rowsLimit: Long): DataFrame = {
+    // a null coordinate meets no ring cell and scores a null d2 in the exact
+    // fallback, which the ranking skips: such probes can never yield a row
+    val live = probeRows.filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+    val xs = live.map(_.getDouble(1))
+    val ys = live.map(_.getDouble(2))
+    // one top-k per probe_id, as the big regime's ranking groups by it
+    val groupOf = mutable.LinkedHashMap.empty[String, Int]
+    val group = live.map(r => groupOf.getOrElseUpdate(r.getString(0), groupOf.size))
+    val ids = groupOf.keysIterator.toArray
+    val best = Array.fill(ids.length)(new TopKBuffer(k))
+    val rows = targets.queryExecution.toRdd
+
+    // one target scan for the probe rows `chunk`, merged into `best`
+    def scan(chunk: Array[Int], cells: CellTable, distinct: Boolean): Unit = {
+      val slotOf = mutable.LinkedHashMap.empty[Int, Int]
+      val slot = chunk.map(i => slotOf.getOrElseUpdate(group(i), slotOf.size))
+      val slotGroup = slotOf.keysIterator.toArray
+      val bc = spark.sparkContext.broadcast(
+        new ScanSide(chunk.map(xs), chunk.map(ys), slot, slotGroup.length, cells))
+      val parts = try rows.mapPartitions(it => scanPartition(it, bc.value, res, k, distinct)).collect()
+      finally bc.destroy()
+      parts.foreach { case (s, b) =>
+        val into = best(slotGroup(s))
+        var i = 0
+        while (i < b.n) { insert(into, b.d2s(i), b.ids(i), distinct); i += 1 }
+      }
+    }
+
+    var pending = live.indices.toArray
+    var r = 0
+    while (r <= maxR && pending.nonEmpty) {
+      // same ring span as the big regime's rounds
+      val rHi = math.min(maxR, math.max(r + ringsPerRound - 1, 2 * r))
+      val ringCells = (r to rHi).map(rr => if (rr == 0) 1L else 6L * rr).sum
+      val perChunk = math.min(math.max(1L, rowsLimit / ringCells), pending.length.toLong).toInt
+      pending.grouped(perChunk).foreach { chunk =>
+        val cells = CellTable(chunk.indices.iterator.flatMap { i =>
+          val c0 = HexGrid.encode(xs(chunk(i)), ys(chunk(i)), res)
+          (r to rHi).iterator.flatMap(rr => HexGrid.ring(c0, rr).iterator.map(_ -> i))
+        })
+        scan(chunk, cells, distinct = false)
+      }
+      // the big regime's exit test: k filled and the k-th beats the next
+      // ring's bound; a null probe_id never matches its done-set join
+      val bound = ringLowerBound(res, rHi + 1)
+      val done = best.indices.map { g =>
+        ids(g) != null && best(g).n == k && math.sqrt(best(g).d2s(k - 1)) < bound
+      }
+      pending = pending.filterNot(i => done(group(i)))
+      r = rHi + 1
+    }
+    if (pending.nonEmpty) {
+      // ring budget exhausted: exact scan into fresh buffers. `distinct`
+      // mirrors the big regime's distinct() over this tail's candidates
+      pending.foreach(i => best(group(i)) = new TopKBuffer(k))
+      scan(pending, null, distinct = true)
+    }
+    val out = new java.util.ArrayList[Row]()
+    for (g <- ids.indices; i <- 0 until best(g).n)
+      out.add(Row(ids(g), best(g).ids(i).toString, best(g).d2s(i), i + 1))
+    localResult(spark, out)
+  }
+
+  /** Per-partition top-k of each probe slot the partition's targets reach. */
+  private def scanPartition(it: Iterator[InternalRow], s: ScanSide, res: Int, k: Int,
+                            distinct: Boolean): Iterator[(Int, TopKBuffer)] = {
+    val bufs = new Array[TopKBuffer](s.nSlots)
+    while (it.hasNext) {
+      val t = it.next()
+      if (!t.isNullAt(0) && !t.isNullAt(1) && !t.isNullAt(2)) {
+        val cx = t.getDouble(1); val cy = t.getDouble(2)
+        val hits = if (s.cells == null) null else s.cells.get(HexGrid.encode(cx, cy, res))
+        val n = if (s.cells == null) s.xs.length else if (hits == null) 0 else hits.length
+        var j = 0
+        while (j < n) {
+          val p = if (hits == null) j else hits(j)
+          val x = s.xs(p); val y = s.ys(p)
+          val d2 = (cx - x) * (cx - x) + (cy - y) * (cy - y)
+          var b = bufs(s.slot(p))
+          if (b == null) { b = new TopKBuffer(k); bufs(s.slot(p)) = b }
+          insert(b, d2, t.getUTF8String(0), distinct)
+          j += 1
+        }
+      }
+    }
+    bufs.iterator.zipWithIndex.collect { case (b, i) if b != null => (i, b) }
+  }
+
+  /** TopKBuffer insert; `distinct` skips an entry equal to one held (NaN equal
+    * to NaN, as distinct() compares). An equal entry evicted earlier lost to
+    * k strictly better ones, so the buffer stays the top-k of distinct entries. */
+  private def insert(b: TopKBuffer, d2: Double, id: UTF8String, distinct: Boolean): Unit = {
+    // held entries are sorted: one equal to (d2, id) cannot follow a d2 above the last
+    if (distinct && b.n > 0 && !(d2 > b.d2s(b.n - 1))) {
+      var i = 0
+      while (i < b.n) {
+        if ((b.d2s(i) == d2 || (b.d2s(i).isNaN && d2.isNaN)) && b.ids(i) == id) return
+        i += 1
+      }
+    }
+    b.insert(d2, id)
+  }
+
+  /** Big-probe regime of [[ringJoin]]: round state in checkpointed DataFrames. */
+  private def shuffleRounds(probes: DataFrame, targets: DataFrame, k: Int, res: Int,
+                            maxR: Int, ringsPerRound: Int,
+                            checkpointDir: Option[String]): DataFrame = {
+    val spark = probes.sparkSession
+    graft.functions.GeoFunctions.register(spark)
+    val ck = graft.core.Checkpoints.strategy(probes, checkpointDir)
+    val probes0 = ck(probes)
     val nProbes0 = probes0.count()
-    val smallProbes = nProbes0 <= smallProbeLimit
-    val t = if (smallProbes) tBase.persist() else tBase.repartition(col("tcell")).persist()
+    val t = targets
+      .withColumn("tcell", graft.functions.GeoFunctions.hex_encode(col("cx"), col("cy"), lit(res)))
+      .repartition(col("tcell")).persist()
     try {
     // candidates carry (probe_id, target_id, d2) ONLY — the probe coordinates
     // live in `pending` and would otherwise ride every ranking shuffle
@@ -135,9 +286,7 @@ object KnnJoin {
     // ONCE and truncate lineage — a lazy checkpoint re-ran the whole round
     // chain on every action (recompute amplification across rounds)
     var pending = probes0
-    // -1 keeps the empty-input flow on the original path: one (empty) round
-    // still runs, so doneParts is never an empty reduce
-    var nPending = if (nProbes0 == 0) -1L else nProbes0
+    var nPending = nProbes0
     // acc = running top-k candidates of UNFINISHED probes only (no rnk col)
     var acc: DataFrame = candOf(pending.limit(0).crossJoin(t.limit(0)))
     // finalized (probe_id, target_id, d2, rnk) blocks — checkpointed leaves
@@ -159,16 +308,8 @@ object KnnJoin {
       val rHi = math.min(maxR, math.max(r + ringsPerRound - 1, 2 * r))
       val ringCells = flatten(array((r to rHi).map(rr =>
         graft.functions.GeoFunctions.hex_ring(col("x"), col("y"), lit(res), lit(rr))): _*))
-      // exploded rows this round = pending × Σ ring sizes (ring 0 = 1 cell,
-      // ring rr = 6·rr cells) — known exactly, so the broadcast guard needs
-      // no size estimate
-      val cellsThisRound = (r to rHi).map(rr => if (rr == 0) 1L else 6L * rr).sum
       val exploded = pending.withColumn("pcell", explode(ringCells))
-      val probeSide =
-        if (smallProbes && (if (nPending < 0) 0L else nPending) * cellsThisRound <= broadcastRowsLimit)
-          broadcast(exploded)
-        else exploded
-      val cand = candOf(probeSide.join(t, col("pcell") === col("tcell")))
+      val cand = candOf(exploded.join(t, col("pcell") === col("tcell")))
       // rank old top-k ∪ new candidates, keep top-k — the only rows a later
       // round could ever emit (d2 never changes; candidates only accumulate)
       val topk = ck(rankTopK(acc.unionByName(cand)))
@@ -197,7 +338,8 @@ object KnnJoin {
     } else {
       // every probe finished through the ring bound: acc is empty — union
       // the checkpointed result blocks directly, no tail ranking stage
-      doneParts.reduce(_ unionByName _)
+      doneParts.reduceOption(_ unionByName _)
+        .getOrElse(localResult(spark, java.util.Collections.emptyList[Row]()))
     }
     } finally t.unpersist(blocking = false) // result = checkpointed blocks only
   }

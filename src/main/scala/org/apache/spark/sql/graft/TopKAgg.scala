@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Mutable k-bounded candidate set ordered by (d2 asc, id asc). Kept as a
   * simple sorted array — k is small (single digits in kNN practice), so
   * insertion beats heap constants and serialization is trivial. */
-final class TopKBuffer(val k: Int) {
+final class TopKBuffer(val k: Int) extends Serializable {
   var n: Int = 0
   val d2s: Array[Double] = new Array[Double](k)
   val ids: Array[UTF8String] = new Array[UTF8String](k)
